@@ -18,11 +18,10 @@ Semantics mirror the reference crawler (w3c/reffy):
   scheme/host, default-port drop, uppercase percent-escapes, decode
   unreserved escapes) composed with the reference canonicalization.
 
-Scale design: the canonicalization chain is pure Column expressions
-(whole-stage codegen, JVM-side). Percent-escape normalization needs a
-character-table rewrite, so ``canonicalize_urls`` routes only rows that
-actually contain ``%`` (rare in practice) through an Arrow-batched pandas
-UDF and unions the two branches — the hot path never leaves the JVM.
+Scale design: ``url_canon_col`` is the whole ``url_canon`` as one Column
+expression (percent-normalization included, via ``split``/``transform``/
+``array_join``), so canonicalization never leaves the JVM; ``url_canon_py``
+is its driver-side twin and test oracle (property-tested equal).
 """
 
 from __future__ import annotations
@@ -30,14 +29,11 @@ from __future__ import annotations
 import re
 from urllib.parse import urlsplit, urlunsplit
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType
 
 # --------------------------------------------------------------------------
-# Python kernels (used inside pandas UDFs and by tests / the simulator)
+# Python kernels (oracles for the Column kernels; used by tests / the simulator)
 # --------------------------------------------------------------------------
 
 # JS encodeURIComponent leaves these unescaped: A-Z a-z 0-9 - _ . ! ~ * ' ( )
@@ -158,60 +154,62 @@ def host_group_py(url: str) -> str:
 
 
 def canonicalize_url_col(url: Column) -> Column:
-    """Reference ``canonicalizeUrl`` as a pure Column expression chain.
-
-    Whole-stage-codegen friendly; no Python boundary.
-    """
+    """Reference ``canonicalizeUrl`` as a pure Column expression chain."""
     u = F.regexp_replace(url, r"^http:", "https:")
     u = F.split(u, "#").getItem(0)
     u = F.replace(u, F.lit("index.html"), F.lit(""))
     u = F.replace(u, F.lit("Overview.html"), F.lit(""))
     u = F.replace(u, F.lit("cover.html"), F.lit(""))
-    u = F.regexp_replace(u, r"spec\.whatwg\.org/.*", "spec.whatwg.org/")
+    # [^\n] is Python's "."; Java's "." also stops at \r, U+0085, U+2028/9
+    u = F.regexp_replace(u, r"spec\.whatwg\.org/[^\n]*", "spec.whatwg.org/")
     u = F.regexp_replace(u, r"w3\.org/TR/(([^/]+/)+)[^/]+\.[^/]+$", "w3.org/TR/$1")
     u = F.regexp_replace(u, r"w3\.org/TR/([^/]+)$", "w3.org/TR/$1/")
     u = F.regexp_replace(u, r"w3c\.github\.io/([^/]+)$", "w3c.github.io/$1/")
     return u
 
 
-def _lower_scheme_host(url: Column) -> Column:
-    """Lowercase the scheme://host[:port] prefix; drop the original
-    scheme's default port, rewrite http→https (reference canonicalizeUrl
-    rule), then drop :443 — both drops for one-pass idempotence, see
-    ``url_canon_py``."""
-    prefix = F.regexp_extract(url, r"^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*)", 1)
-    rest = F.substring(url, F.length(prefix) + F.lit(1), F.lit(2 ** 30))
-    prefix = F.lower(prefix)
-    prefix = F.regexp_replace(prefix, r"^(http://[^/:]*):80$", "$1")
-    prefix = F.regexp_replace(prefix, r"^http://", "https://")
-    prefix = F.regexp_replace(prefix, r"^(https://[^/:]*):443$", "$1")
-    return F.when(prefix == "", url).otherwise(F.concat(prefix, rest))
+# characters Python's ``str.strip()`` removes (``str.isspace``, the last
+# is U+3000); Spark's default ``trim`` removes only U+0020
+_PY_WS = "".join(c for c in map(chr, range(0x3001)) if c.isspace())
+# %XX codes (upper-case hex) of the RFC 3986 unreserved characters
+_UNRESERVED_HEX = sorted(f"{ord(c):02X}" for c in _UNRESERVED)
+
+
+def _pct_normalize_col(s: Column) -> Column:
+    """``_pct_normalize`` as a Column: every ``%``-split segment but the
+    first that opens with two hex digits is an escape."""
+
+    def seg(p: Column, i: Column) -> Column:
+        h = F.upper(F.substring(p, 1, 2))
+        esc = F.when(h.isin(_UNRESERVED_HEX), F.decode(F.unhex(h), "US-ASCII"))
+        esc = F.concat(esc.otherwise(F.concat(F.lit("%"), h)), F.substring(p, 3, 2**30))
+        is_esc = p.rlike("^[0-9a-fA-F]{2}")
+        return F.when(i == 0, p).when(is_esc, esc).otherwise(F.concat(F.lit("%"), p))
+
+    return F.array_join(F.transform(F.split(s, "%", -1), seg), "")
 
 
 def url_canon_col(url: Column) -> Column:
-    """JVM-only url_canon: correct for URLs with no percent-escapes.
-    Output-trimmed like ``url_canon_py`` (idempotence — see there)."""
-    return F.trim(canonicalize_url_col(_lower_scheme_host(F.trim(url))))
-
-
-@pandas_udf(StringType())
-def url_canon_udf(urls: pd.Series) -> pd.Series:
-    """Arrow-batched full url_canon (handles percent normalization)."""
-    return urls.map(lambda u: url_canon_py(u) if u is not None else None)
+    """``url_canon_py`` as one JVM Column expression, in ``urlsplit``
+    order; exact for absolute ``scheme://host`` URLs with no brackets or
+    whitespace in the host. Malformed authorities (``[bad``, an empty
+    host: ``urlsplit``'s ``ValueError`` fallback or the empty-netloc
+    rebuild) are outside the contract. The host is never
+    percent-normalized; port drops as in ``url_canon_py``."""
+    u = F.translate(F.trim(url, F.lit(_PY_WS)), "\t\r\n", "")
+    prefix = F.regexp_extract(u, r"^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*)", 1)
+    rest = F.substring(u, F.length(prefix) + F.lit(1), F.lit(2**30))
+    rest = F.regexp_replace(F.substring_index(rest, "#", 1), r"^([^?]*)\?\z", "$1")
+    rest = F.when(rest.contains("%"), _pct_normalize_col(rest)).otherwise(rest)
+    prefix = F.regexp_replace(F.lower(prefix), r"^(http://[^/]*):80\z", "$1")
+    prefix = F.regexp_replace(prefix, r"^http://", "https://")
+    prefix = F.regexp_replace(prefix, r"^(https://[^/]*):443\z", "$1")
+    return F.trim(canonicalize_url_col(F.concat(prefix, rest)), F.lit(_PY_WS))
 
 
 def with_url_canon(df: DataFrame, url_col: str = "url", out: str = "url_canon") -> DataFrame:
-    """Add the canonical-URL key, keeping the hot path JVM-side.
-
-    Rows without ``%`` (the overwhelming majority of crawl URLs) are
-    canonicalized by the codegen Column chain; only rows containing a
-    percent-escape cross the Arrow boundary. The union preserves schema.
-    """
-    c = F.col(url_col)
-    has_pct = c.contains("%")
-    fast = df.filter(~has_pct).withColumn(out, url_canon_col(c))
-    slow = df.filter(has_pct).withColumn(out, url_canon_udf(c))
-    return fast.unionByName(slow)
+    """Add the canonical-URL key ``out`` (``url_canon_col``), JVM-only."""
+    return df.withColumn(out, url_canon_col(F.col(url_col)))
 
 
 def host_col(url: Column) -> Column:

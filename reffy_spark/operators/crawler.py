@@ -151,7 +151,9 @@ class CrawlEngine:
         checkpoint_dir: str | None = None,
         round_ms: int = 2000,
         modules: list[str] | None = None,
-        use_bloom: "bool | str" = True,  # True=bloom, "cuckoo", False=exact
+        # True = bloom prefilter once seen reaches FR.BLOOM_MIN_ITEMS
+        # (exact anti-join below it), "cuckoo", False = always exact
+        use_bloom: "bool | str" = True,
         collect_metrics: bool = True,
         discover: bool = True,
         assume_canonical_unique: bool = False,
@@ -873,6 +875,10 @@ class CrawlEngine:
                             # here on; no per-round rebuild retries)
                             bloom = None
                             bloom_retired = True
+                        elif seen_count < FR.BLOOM_MIN_ITEMS:
+                            # small seen set: the exact anti-join alone
+                            # beats building, probing and folding a bloom
+                            bloom = None
                         elif bloom is None or seen_count > bloom.n_capacity:
                             # epoch (re)build with 2x headroom so steady
                             # growth is absorbed by incremental folds.

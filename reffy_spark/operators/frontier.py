@@ -6,11 +6,13 @@ Spark re-expression of the reference's scheduler:
 * URL-seen set = left-anti join on ``url_canon`` (the reference gets
   dedup for free from its fixed seed list — crawlList maps once,
   /root/reference/src/lib/specs-crawler.js:473-479 — a general frontier
-  needs the real thing). A broadcast bloom prefilter built from Spark's
-  deterministic ``xxhash64`` prunes the anti-join: rows the bloom has
-  definitely never seen skip the shuffle entirely; only "maybe seen"
-  rows are confirmed exactly. The exact set remains the source of truth
-  (FIXTURES.md §3).
+  needs the real thing). Once the seen set reaches ``BLOOM_MIN_ITEMS``
+  the crawl loop adds a broadcast bloom prefilter built from Spark's
+  deterministic ``xxhash64``: rows the bloom has definitely never seen
+  skip the seen lookup entirely; only "maybe seen" rows are confirmed
+  exactly. Below that size the bloom's Python build/probe/fold stages
+  cost more than the exact anti-join they prune, so the exact anti-join
+  runs alone. The exact set remains the source of truth (FIXTURES.md §3).
 * Politeness = per-``host_group`` budget ranking
   (/root/reference/src/lib/throttled-queue.js:110-128 per-origin serial
   queues + sleepInterval politeness,
@@ -165,6 +167,18 @@ _SCAN_ANTI_MAX_LEFT_BYTES = 256 * 1024 * 1024
 # row-count twin of the byte guard, used when Catalyst has no estimate
 # (crawl round state is lineage-truncated): ~100 B/url key → ~200 MB
 _SCAN_ANTI_MAX_LEFT_ROWS = 2_000_000
+
+# the crawl loop builds the URL-seen bloom only once the exact seen count
+# reaches this: the anti_join_scan boundary (64 MB of seen) at the same
+# ~100 B/url key, ~670k URLs. The tools/seenfilter_bench.py preseed
+# crawl (20k or 100k pages, 3 rounds, bloom forced on vs exact,
+# alternating) on local[4], 4-vCPU VM, read bloom/exact 1.3-1.4x at 6k and 32k seen, 1.5x at 300k, 1.6x at 1M,
+# 1.4x at 3M and 1.6x at 5M: no crossover up to 5M there. The bloom's
+# only measured win is 0.91x at 5M seen on 32 cores with the scan-shaped
+# anti-join (BENCH/BASELINE.md, round 7); 32 cores between 63k seen (a
+# tie) and 5M is unmeasured, so the bloom stays on from the scan
+# boundary up.
+BLOOM_MIN_ITEMS = _SCAN_ANTI_MIN_BYTES // 100
 
 
 from reffy_spark.plan_stats import estimated_bytes as _estimated_bytes

@@ -102,9 +102,13 @@ def test_links_table_matches_generator(engine_result, spark):
     assert checked > 5
 
 
-def test_bloom_cuckoo_and_exact_paths_agree(spark, corpus):
+def test_bloom_cuckoo_and_exact_paths_agree(spark, corpus, monkeypatch):
     # all three URL-seen membership structures (exact anti-join, bloom
-    # split, cuckoo-filter split) must produce identical crawls
+    # split, cuckoo-filter split) must produce identical crawls; the
+    # bloom is forced on at this small seen set (threshold 0)
+    from reffy_spark.operators import frontier as FR
+
+    monkeypatch.setattr(FR, "BLOOM_MIN_ITEMS", 0)
     pages, seeds, robots = corpus
     res_b = CrawlEngine(
         spark, pages, robots, modules=["links"], use_bloom=True, collect_metrics=False
@@ -123,7 +127,14 @@ def test_bloom_cuckoo_and_exact_paths_agree(spark, corpus):
     assert sorted(r["url_canon"] for r in res_c.url_seen.collect()) == seen_e
 
 
-def test_resume_equals_uninterrupted(spark, corpus, tmp_path_factory, engine_result):
+def test_resume_equals_uninterrupted(
+    spark, corpus, tmp_path_factory, engine_result, monkeypatch
+):
+    # bloom forced on at this small seen set (threshold 0): resume must
+    # rebuild it from the loaded seen set and keep folding into it
+    from reffy_spark.operators import frontier as FR
+
+    monkeypatch.setattr(FR, "BLOOM_MIN_ITEMS", 0)
     pages, seeds, robots = corpus
     chk = str(tmp_path_factory.mktemp("chk_resume"))
     eng = CrawlEngine(spark, pages, robots, checkpoint_dir=chk, modules=["links"])
@@ -495,16 +506,21 @@ def test_async_commit_failure_surfaces_and_engine_recovers(spark, corpus):
 
 
 def test_resume_after_torn_round_commit(
-    spark, corpus, tmp_path_factory, engine_result
+    spark, corpus, tmp_path_factory, engine_result, monkeypatch
 ):
     # Crash INSIDE a round's commit sequence: round=2's results were
     # written but the crash hit before its seen/frontier state landed.
     # resume() must treat round 2 as never-happened (its seen marker is
     # the commit point), redo it, and end up equal to the uninterrupted
     # crawl — no lost and no duplicated round.
+    # The bloom is forced on (threshold 0) so the rebuild from the loaded
+    # seen set after a torn round is covered too.
     import os
     import shutil
 
+    from reffy_spark.operators import frontier as FR
+
+    monkeypatch.setattr(FR, "BLOOM_MIN_ITEMS", 0)
     pages, seeds, robots = corpus
     chk = str(tmp_path_factory.mktemp("chk_torn"))
     CrawlEngine(
@@ -561,6 +577,8 @@ def test_seen_filter_built_once_not_per_round(spark, corpus, monkeypatch):
     monkeypatch.setattr(CK, "cuckoo_table", ct)
     monkeypatch.setattr(FR, "build_bloom", bb)
     monkeypatch.setattr(FR, "fold_bloom", fb)
+    # force the bloom on at this small seen set
+    monkeypatch.setattr(FR, "BLOOM_MIN_ITEMS", 0)
 
     res_c = CrawlEngine(
         spark, pages, robots, modules=["links"], use_bloom="cuckoo",
@@ -586,3 +604,28 @@ def test_seen_filter_built_once_not_per_round(spark, corpus, monkeypatch):
     assert res_e.url_seen.count() == n_c
     assert _engine_fetches(res_c) == _engine_fetches(res_e)
     assert _engine_fetches(res_b) == _engine_fetches(res_e)
+
+
+def test_small_seen_set_skips_bloom(spark, corpus, monkeypatch):
+    """Below ``BLOOM_MIN_ITEMS`` the default engine (use_bloom=True) never
+    builds or folds a bloom, and crawls exactly like the exact path."""
+    pages, seeds, robots = corpus
+    from reffy_spark.operators import frontier as FR
+
+    calls = []
+    monkeypatch.setattr(FR, "build_bloom", lambda *a, **k: calls.append("build"))
+    monkeypatch.setattr(FR, "fold_bloom", lambda *a, **k: calls.append("fold"))
+
+    res_b = CrawlEngine(
+        spark, pages, robots, modules=["links"], use_bloom=True,
+        collect_metrics=False,
+    ).crawl(seeds, max_rounds=3)
+    res_e = CrawlEngine(
+        spark, pages, robots, modules=["links"], use_bloom=False,
+        collect_metrics=False,
+    ).crawl(seeds, max_rounds=3)
+    assert res_b.url_seen.count() < FR.BLOOM_MIN_ITEMS
+    assert calls == []
+    assert _engine_fetches(res_b) == _engine_fetches(res_e)
+    seen_e = sorted(r["url_canon"] for r in res_e.url_seen.collect())
+    assert sorted(r["url_canon"] for r in res_b.url_seen.collect()) == seen_e

@@ -4,9 +4,11 @@ The reference has no property-based testing (SURVEY.md §5); these guard
 the invariants the distributed plans *assume* — canonicalization
 idempotence (the URL-seen set dedupes on canon(url): a non-idempotent
 canon would let the same page re-enter the frontier), bucket ranges,
-and text-kernel stability. No SparkSession: every function under test
-is the driver-side twin of a Column kernel, bit-compatibility with the
-Column versions is covered by the engine/oracle suites.
+and text-kernel stability. Most properties need no SparkSession: the
+function under test is the driver-side twin of a Column kernel, and
+bit-compatibility with the Column versions is covered by the engine/
+oracle suites. ``url_canon`` is the exception: its Column kernel is
+property-tested equal to its twin here, a batch of URLs per Spark job.
 """
 
 import string
@@ -42,6 +44,56 @@ _urls = st.builds(
     _pathchars,
     st.sampled_from(["", "#frag", "#", "#a/b"]),
 )
+
+
+# well-formed absolute URLs (scheme://host, no brackets or whitespace in
+# the host) with surrounding whitespace, tab/CR/LF, '%' escapes (valid,
+# truncated, doubled), '?' and '#' anywhere after the host, and unicode
+# line separators — url_canon_col's contract (see its docstring)
+_escapes = st.builds(
+    lambda a, b: f"%{a}{b}",
+    st.sampled_from("0123456789abcdefABCDEF%gz"),
+    st.sampled_from(["", "1", "e", "E", "%", "x"]),
+)
+_tails = st.just("") | st.builds(
+    lambda delim, parts: delim + "".join(parts),
+    st.sampled_from(["/", "?", "#"]),  # the host ends here
+    st.lists(
+        st.one_of(
+            st.text("aZ09/._~-!$&'()*+,;=:@ é\t\r\n?#\x85\xa0\u2028", max_size=4),
+            _escapes,
+            st.sampled_from(["index.html", "Overview.html", "TR/", "?", "#f"]),
+        ),
+        max_size=8,
+    ),
+)
+_ws = st.sampled_from(["", " ", "\t", "\n", "\xa0", "\u3000"])
+_wellformed_urls = st.builds(
+    lambda lead, scheme, host, port, tail, trail: (
+        f"{lead}{scheme}://{host}{port}{tail}{trail}"
+    ),
+    _ws,
+    st.sampled_from(["http", "HTTP", "https", "hTtPs", "ftp"]),
+    st.one_of(
+        st.text(string.ascii_letters + string.digits + ".-%@:", min_size=1, max_size=12),
+        st.sampled_from(["spec.whatwg.org", "www.w3.org", "w3c.github.io"]),
+    ),
+    st.sampled_from(["", ":80", ":443", ":8080"]),
+    _tails,
+    _ws,
+)
+
+
+@given(st.lists(_wellformed_urls, min_size=1, max_size=200))
+@settings(max_examples=25, deadline=None)
+def test_url_canon_col_equals_python_twin(spark, urls):
+    from pyspark.sql import functions as F
+
+    from reffy_spark.functions.urls import url_canon_col
+
+    df = spark.createDataFrame([(u,) for u in urls], "url string")
+    got = [r[0] for r in df.select(url_canon_col(F.col("url"))).collect()]
+    assert got == [url_canon_py(u) for u in urls]
 
 
 @given(_urls)

@@ -41,6 +41,33 @@ HOST_GROUP_CASES = [
 ]
 
 
+# urlsplit quirks and percent-escape edges; expected values are
+# url_canon_py's, spelled out
+URL_CANON_EDGE_CASES = [
+    ("https://a.org/p\tq", "https://a.org/pq"),  # urlsplit drops tab/CR/LF
+    ("https://a.org/p\r\nq?x\ty", "https://a.org/pq?xy"),
+    ("ht\ttps://A.org/x", "https://a.org/x"),
+    ("https://a11.org/?", "https://a11.org/"),  # empty query dropped
+    ("https://a.org/p?#frag", "https://a.org/p"),
+    ("https://a.org/p??", "https://a.org/p??"),  # query "?" is not empty
+    ("https://a.org/%%41", "https://a.org/%A"),
+    ("https://a.org/x%", "https://a.org/x%"),  # trailing % stays literal
+    ("https://a.org/x%4", "https://a.org/x%4"),
+    ("https://a.org/%7e%2f%c3%a9?q=%3d", "https://a.org/~%2F%C3%A9?q=%3D"),
+    ("https://X%41.org/%41", "https://x%41.org/A"),  # host never normalized
+    ("http://u:p@H.org:80/", "https://u:p@h.org/"),
+]
+
+
+# outside url_canon_col's contract (malformed authority, see its
+# docstring): (url, Column output, url_canon_py output), pinned so a
+# change to either side is seen
+URL_CANON_OUTSIDE_CONTRACT = [
+    ("http:/x%7e", "https:/x~", "https:///x~"),  # no "//": empty netloc
+    ("http://[bad/%7e", "https://[bad/~", "https://[bad/%7e"),  # ValueError
+]
+
+
 @pytest.mark.parametrize("url,expected", CANON_CASES)
 def test_canonicalize_py(url, expected):
     assert canonicalize_url_py(url) == expected
@@ -66,7 +93,7 @@ def test_encode_uri_component_js_parity():
 
 def test_column_kernels_match_python(spark):
     urls = [u for u, _ in CANON_CASES] + [u for u, _ in HOST_GROUP_CASES] + [
-        "https://example.org/sp%2fec",  # percent path → UDF branch
+        "https://example.org/sp%2fec",  # percent path
         "HTTP://Mixed.Case.ORG/Path",
     ]
     df = spark.createDataFrame([(u,) for u in urls], "url string")
@@ -82,16 +109,36 @@ def test_column_kernels_match_python(spark):
         assert got[u][1] == host_group_py(u), u
 
 
-def test_url_canon_col_plan_is_jvm_only(spark):
-    """The fast-path canonicalization must not contain a Python eval node."""
-    df = spark.createDataFrame([("https://a.org/x",)], "url string")
-    plan = (
-        df.withColumn("c", url_canon_col(F.col("url")))
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
+def test_url_canon_edge_cases(spark):
+    df = spark.createDataFrame(URL_CANON_EDGE_CASES, "url string, expected string")
+    for r in with_url_canon(df).collect():
+        assert url_canon_py(r["url"]) == r["expected"], r["url"]
+        assert r["url_canon"] == r["expected"], r["url"]
+
+
+def test_url_canon_outside_contract_pinned(spark):
+    df = spark.createDataFrame(
+        URL_CANON_OUTSIDE_CONTRACT, "url string, col string, py string"
     )
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    for r in with_url_canon(df).collect():
+        assert r["url_canon"] == r["col"], r["url"]
+        assert url_canon_py(r["url"]) == r["py"], r["url"]
+
+
+def test_url_canon_col_plan_is_jvm_only(spark):
+    """Canonicalization, and the frontier built on it, run without a
+    Python eval node and without a branch Union."""
+    from reffy_spark.operators import frontier as FR
+
+    df = spark.createDataFrame([("https://a.org/%7ex",)], "url string")
+    for out in (
+        df.withColumn("c", url_canon_col(F.col("url"))),
+        with_url_canon(df),
+        FR.to_frontier(df),
+    ):
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+        assert "Union" not in plan, plan
 
 
 def test_clean_method_name_f17(spark):

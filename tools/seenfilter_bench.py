@@ -13,10 +13,13 @@ Usage: python tools/seenfilter_bench.py [n_pages] [n_seeds] [rounds]
 ``preseed`` > 0 unions that many already-seen urls into round-0 state
 ("round N+1 of a long crawl" — the regime where the per-round exact
 anti-join against the full seen set is the cost the filters remove).
-Prints one JSON line per mode and a summary line.
+Prints one JSON line per mode and a summary line. The bloom mode forces
+the bloom on at every seen size (``BLOOM_MIN_ITEMS`` = 0) so the
+structure itself is measured. Cores: ``$SPARK_GRAFT_CPUS``, else 32.
 """
 
 import json
+import os
 import sys
 import time
 
@@ -35,7 +38,11 @@ def main() -> None:
     from reffy_spark.session import get_spark
     from reffy_spark.sources import synthetic as syn
 
-    spark = get_spark("seenfilter_bench", cores=32, shuffle_partitions=32)
+    from reffy_spark.operators import frontier as FR
+
+    FR.BLOOM_MIN_ITEMS = 0
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    spark = get_spark("seenfilter_bench", cores=cores, shuffle_partitions=cores)
     pages = syn.gen_pages(spark, N_PAGES, partitions=64)
     pages.write.mode("overwrite").parquet("/tmp/seenfilter_pages.parquet")
     pages = spark.read.parquet("/tmp/seenfilter_pages.parquet")
@@ -82,8 +89,6 @@ def main() -> None:
             # long-crawl seen state in (engine API: _run_rounds is the
             # resume entry point minus the checkpoint read)
             from pyspark.sql import functions as F
-
-            from reffy_spark.operators import frontier as FR
 
             sd = eng._seed_index(seeds)
             fr = FR.to_frontier(
